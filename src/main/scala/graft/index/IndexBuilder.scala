@@ -1,9 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.analysis.{Analyzer, Analyzers}
 import graft.util.SmallFloat
@@ -53,6 +53,14 @@ object Cols {
   */
 final case class FieldStats(docCount: Long, sumTotalTermFreq: Long) {
   def avgdl: Double = if (docCount == 0) 0.0 else sumTotalTermFreq.toDouble / docCount
+}
+
+object FieldStats {
+  /** Field-wise sum over disjoint doc sets (segments, unioned indexes). */
+  def sum(parts: Seq[Map[String, FieldStats]]): Map[String, FieldStats] =
+    parts.flatten.groupMapReduce(_._1)(_._2) { (a, b) =>
+      FieldStats(a.docCount + b.docCount, a.sumTotalTermFreq + b.sumTotalTermFreq)
+    }
 }
 
 /** Deterministic dense docId assignment at scale: sample the key column ONCE
@@ -227,13 +235,8 @@ final class Index(
     val segBlocks = seg.blocks.map(b =>
       b.copy(firstDocId = b.firstDocId + offset, lastDocId = b.lastDocId + offset))
     val newBlocks = blocks.unionAll(segBlocks)
-    val stats = (fieldStats.keySet ++ seg.fieldStats.keySet).map { k =>
-      val a = fieldStats.getOrElse(k, FieldStats(0, 0))
-      val b = seg.fieldStats.getOrElse(k, FieldStats(0, 0))
-      k -> FieldStats(a.docCount + b.docCount, a.sumTotalTermFreq + b.sumTotalTermFreq)
-    }.toMap
     new Index(spark, schema, docs.unionByName(segDocs), newBlocks,
-      IndexBuilder.termDictOf(newBlocks), stats, deletes)
+      IndexBuilder.termDictOf(newBlocks), FieldStats.sum(Seq(fieldStats, seg.fieldStats)), deletes)
   }
 
   /** Full integrity check (reference IndexWriter.check, indexers.py:528-536):
@@ -417,12 +420,6 @@ object IndexBuilder {
     ((id + bucket - 1) / bucket) * bucket
   }
 
-  /** Column form of [[nextBucketStart]]. */
-  def nextBucketStartCol(id: _root_.org.apache.spark.sql.Column): _root_.org.apache.spark.sql.Column = {
-    val bucket = 1L << SaltShift
-    (id + (bucket - 1)).divide(bucket).cast("long") * bucket
-  }
-
   /** Build an index from a source DataFrame. One tokenize pass; one shuffle
     * for postings; termDict and stats derive from the compressed blocks.
     */
@@ -598,24 +595,42 @@ object IndexBuilder {
       }
     }
 
+  /** The posting-block columns, in [[PostingBlock]] field order. */
+  val PostingSchema: StructType = Encoders.product[PostingBlock].schema
+  val PostingColumns: Seq[String] = PostingSchema.fieldNames.toSeq
+
   /** Backfill blob columns absent from postings persisted by layouts that
     * predate them (payloads/offsets) — read-compat mirrors the manifest
     * parser's tolerance of old field lines. Reads must use
-    * [[readPostings]] (mergeSchema): a mixed-version postings dir read
-    * without schema merging infers the schema from ONE nondeterministically
-    * chosen footer, so new segments' payload/offset blobs could silently
-    * vanish (or old rows read null) depending on file listing order. Rows
-    * from pre-blob segments surface as nulls after the merge and are
-    * coalesced to empty here.
+    * [[readPostings]] (declared schema): a mixed-version postings dir read
+    * with an INFERRED schema takes it from ONE nondeterministically chosen
+    * footer, so new segments' payload/offset blobs could silently vanish
+    * (or old rows read null) depending on file listing order. Rows from
+    * pre-blob segments read those columns as null and are coalesced to
+    * empty here.
     */
   def withBlobDefaults(df: DataFrame): DataFrame =
     Seq("payloadsBlob", "offsetsBlob").foldLeft(df)((d, c) =>
-      if (d.columns.contains(c)) d.withColumn(c, coalesce(col(c), lit(Array.empty[Byte])))
-      else d.withColumn(c, lit(Array.empty[Byte])))
+      d.withColumn(c, coalesce(col(c), lit(Array.empty[Byte]))))
 
-  /** Schema-merged postings read — see [[withBlobDefaults]]. */
+  /** Postings read against the declared [[PostingSchema]] — no footer
+    * inference job, identical for every file-listing order; partition
+    * columns (`segment=`) are still discovered. See [[withBlobDefaults]].
+    */
   def readPostings(spark: SparkSession, path: String): DataFrame =
-    withBlobDefaults(spark.read.option("mergeSchema", "true").parquet(path))
+    withBlobDefaults(spark.read.schema(PostingSchema).parquet(path))
+
+  /** The [[PostingBlock]] view of a postings read (drops partition columns). */
+  def asBlocks(postings: DataFrame): Dataset[PostingBlock] = {
+    import postings.sparkSession.implicits._
+    postings.select(PostingColumns.map(col): _*).as[PostingBlock]
+  }
+
+  /** Tombstone table (`docId` per deleted doc) read against its declared
+    * schema — no footer inference job.
+    */
+  def readDeletes(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("docId", LongType)))).parquet(path)
 
   def load(spark: SparkSession, dir: String): Index = {
     import spark.implicits._
@@ -624,7 +639,7 @@ object IndexBuilder {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val deletes =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes")))
-        Some(spark.read.parquet(s"$dir/deletes"))
+        Some(readDeletes(spark, s"$dir/deletes"))
       else None
     new Index(
       spark,

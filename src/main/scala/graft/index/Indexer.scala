@@ -341,11 +341,6 @@ final class Indexer(
     fs.create(new Path(out, "_COALESCED"), true).close()
   }
 
-  private def nextSegId: Long =
-    if (!fs.exists(new Path(s"$dir/segments"))) 0L
-    else spark.read.parquet(s"$dir/segments").agg(max(col("segmentId")))
-      .collect()(0).getInt(0).toLong + 1L
-
   /** Durably commit buffered adds (one segment) and queued deletes. */
   def commit(): Unit = {
     ensureWritable()
@@ -354,9 +349,10 @@ final class Indexer(
     // matched docIds write straight to the tombstone table — a broad
     // delete-by-query never materializes on the driver. Writing them BEFORE
     // the segment append is equivalent (new docs cannot match a pre-add
-    // view) and keeps the resolution snapshot unambiguous.
+    // view) and keeps the resolution snapshot unambiguous. A non-NRT
+    // handle's serving view IS the committed view: reuse the open one.
     if (pendingDeletes.nonEmpty && fs.exists(new Path(s"$dir/segments"))) {
-      val s = committedSearcher
+      val s = if (nrt) committedSearcher else searcher
       val ids = pendingDeletes.map(q => s.eval(q).select("docId"))
         .reduce(_ unionByName _).distinct()
       // empty writes would leave a schema-less (part-file-free) parquet dir
@@ -365,7 +361,8 @@ final class Indexer(
     if (buf.nonEmpty) {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(buf.toSeq, math.max(1, buf.size / 10000)), sourceSchema)
-      StreamingIndexer.appendSegment(df, schema, dir, nextSegId)
+      val lineage = Lineage.read(spark, dir) // next id and docId offset
+      StreamingIndexer.appendSegment(df, schema, dir, lineage.nextSegId, lineage)
       buf.clear()
     }
     pendingDeletes.clear()
@@ -412,7 +409,7 @@ final class Indexer(
       base.termDict, base.fieldStats)
     val idx =
       if (fs.exists(new Path(s"$dir/deletes")))
-        withDv.withDeletes(spark.read.parquet(s"$dir/deletes"))
+        withDv.withDeletes(IndexBuilder.readDeletes(spark, s"$dir/deletes"))
       else withDv
     new Searcher(idx)
   }
@@ -517,34 +514,6 @@ final class Indexer(
 
   // ---------------------------------------------------------------- merging
 
-  /** Live lineage: (segmentId, firstDocId, docsIndexed, bytesCompressed,
-    * maxDocId) of every segment the committed view serves, ascending by id.
-    * `maxDocId` closes the segment's covering docId interval (see
-    * [[CheckpointedBuild.SegmentMeta]]); lineage rows written before the
-    * column existed fall back to the dense extent for appended segments and
-    * Long.MaxValue (conservative: always a discovery candidate) for merged
-    * ones, whose extent the old rows cannot reconstruct.
-    */
-  private def liveSegmentMeta: Seq[(Long, Long, Long, Long, Long)] = {
-    if (!fs.exists(new Path(s"$dir/segments"))) return Seq.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).toSet
-    val raw = spark.read.parquet(s"$dir/segments")
-    val legacyMax = when(col("status") === "merged", lit(Long.MaxValue))
-      .otherwise(col("firstDocId") + col("docsIndexed") - 1L)
-    val maxCol =
-      if (raw.columns.contains("maxDocId")) coalesce(col("maxDocId"), legacyMax)
-      else legacyMax
-    raw
-      .filter(col("status") =!= "superseded")
-      .groupBy("segmentId")
-      .agg(min("firstDocId").as("f"), max("docsIndexed").as("d"),
-        max("bytesCompressed").as("b"), max(maxCol).as("m"))
-      .collect()
-      .map(r => (r.getInt(0).toLong, r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .filter(t => live.contains(t._1))
-      .sortBy(_._1).toSeq
-  }
-
   /** Lucene forceMerge(maxSegments) (reference `commit(merge=N)`,
     * indexers.py:648-661): fold the SMALLEST live segments (by compressed
     * bytes — the small-file problem is the thing being fixed) into one until
@@ -557,9 +526,11 @@ final class Indexer(
   def forceMerge(maxSegments: Int): Unit = {
     ensureWritable()
     require(maxSegments >= 1, s"maxSegments must be >= 1 (got $maxSegments)")
-    val live = liveSegmentMeta
+    val lineage = Lineage.read(spark, dir)
+    val live = lineage.live
     if (live.length <= maxSegments) return
-    mergeSegments(live.sortBy(m => (m._4, m._1)).take(live.length - maxSegments + 1))
+    mergeSegments(live.sortBy(m => (m.bytesCompressed, m.id)).take(live.length - maxSegments + 1),
+      lineage.nextSegId)
   }
 
   /** Lucene forceMergeDeletes (reference `commit(merge=True)`): fold every
@@ -583,10 +554,11 @@ final class Indexer(
     ensureWritable()
     lastDeleteDiscoveryCandidates = Seq.empty
     if (!fs.exists(new Path(s"$dir/deletes"))) return
-    val live = liveSegmentMeta
+    val lineage = Lineage.read(spark, dir)
+    val live = lineage.live
     if (live.isEmpty) return
     import spark.implicits._
-    val del = spark.read.parquet(s"$dir/deletes").select("docId").distinct()
+    val del = IndexBuilder.readDeletes(spark, s"$dir/deletes").distinct()
     // Discovery WITHOUT a corpus scan: the lineage already knows each live
     // segment's covering docId interval [firstDocId, maxDocId], so candidates
     // come from joining the (small) distinct tombstoned docIds against the
@@ -596,7 +568,7 @@ final class Indexer(
     // tombstones stay in the table as vacuous no-ops), so a verify join runs
     // next — but partition-pruned to the CANDIDATE segment directories only,
     // keeping repeat calls idempotent without rescanning the index.
-    val intervals = live.map(m => (m._1, m._2, m._5)).toDF("segment", "__lo", "__hi")
+    val intervals = live.map(m => (m.id, m.firstDocId, m.maxDocId)).toDF("segment", "__lo", "__hi")
     val candidates = del
       .join(broadcast(intervals), col("docId").between(col("__lo"), col("__hi")))
       .select("segment").distinct()
@@ -609,7 +581,7 @@ final class Indexer(
       .select("segment").distinct()
       .collect().map(_.getAs[Number]("segment").longValue()).toSet
     if (affected.isEmpty) return
-    mergeSegments(live.filter(m => affected.contains(m._1)))
+    mergeSegments(live.filter(m => affected.contains(m.id)), lineage.nextSegId)
   }
 
   /** Discovery evidence (tests/bench): the candidate segment ids the last
@@ -637,12 +609,10 @@ final class Indexer(
     */
   def vacuumMerged(outstandingPins: Seq[IndexPin] = Seq.empty): Seq[Long] = {
     ensureWritable()
-    if (!fs.exists(new Path(s"$dir/segments"))) return Seq.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).toSet
-    val all = spark.read.parquet(s"$dir/segments")
-      .select("segmentId").distinct().collect().map(_.getInt(0).toLong)
+    val lineage = Lineage.read(spark, dir)
+    val live = lineage.liveIds.toSet
     val pinned = outstandingPins.flatMap(_.segmentIds).toSet
-    val dead = all.filterNot(live).filterNot(pinned).sorted.toSeq
+    val dead = lineage.allIds.filterNot(live).filterNot(pinned)
     // report only ids actually reclaimed NOW (idempotent across calls —
     // a prior vacuum's ids stay dead in the lineage forever)
     dead.filter { id =>
@@ -682,14 +652,14 @@ final class Indexer(
     val pinnedFiles = outstandingPins.flatMap(_.deleteFiles).toSet
     if (current.exists(pinnedFiles.contains)) return -1L
     import spark.implicits._
-    val del = spark.read.parquet(s"$dir/deletes").select("docId").distinct()
+    val del = IndexBuilder.readDeletes(spark, s"$dir/deletes").distinct()
     val total = del.count()
     if (total == 0L) return 0L
-    val live = liveSegmentMeta
+    val live = Lineage.read(spark, dir).live
     val candidates =
       if (live.isEmpty) Seq.empty[Long]
       else {
-        val intervals = live.map(m => (m._1, m._2, m._5)).toDF("segment", "__lo", "__hi")
+        val intervals = live.map(m => (m.id, m.firstDocId, m.maxDocId)).toDF("segment", "__lo", "__hi")
         del.join(broadcast(intervals), col("docId").between(col("__lo"), col("__hi")))
           .select("segment").distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
@@ -704,7 +674,7 @@ final class Indexer(
     fs.delete(tmp, true)
     // materialize the rewrite BEFORE touching the source table
     keep.write.mode("overwrite").parquet(tmp.toString)
-    val kept = spark.read.parquet(tmp.toString).count()
+    val kept = IndexBuilder.readDeletes(spark, tmp.toString).count()
     if (kept == total) { fs.delete(tmp, true); return 0L }
     val old = new Path(s"$dir/.deletes-old")
     val inflight = new Path(s"$dir/.deletes-vacuum-inflight")
@@ -750,17 +720,12 @@ final class Indexer(
     */
   def check(repair: Boolean = false): CheckReport = {
     if (repair) ensureWritable()
-    val live = liveSegmentMeta
-    val results: Seq[((Long, Long, Long, Long, Long), Option[String])] = live.map { m =>
-      val id = m._1
+    val live = Lineage.read(spark, dir).live
+    val results: Seq[(LiveSegment, Option[String])] = live.map { m =>
+      val id = m.id
       val err =
         try {
-          import spark.implicits._
-          IndexBuilder.withBlobDefaults(spark.read.parquet(s"$dir/postings/segment=$id"))
-            .select("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf", "sumTf",
-              "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob",
-              "payloadsBlob", "offsetsBlob")
-            .as[PostingBlock]
+          IndexBuilder.asBlocks(IndexBuilder.readPostings(spark, s"$dir/postings/segment=$id"))
             .foreach { b: PostingBlock =>
               val ps = PostingCodec.decodeBlock(b, withPositions = true)
               require(ps.length == b.numDocs, s"numDocs mismatch in ${b.field}:${b.term}")
@@ -782,29 +747,29 @@ final class Indexer(
       (m, err)
     }
     val bad = results.collect { case (m, Some(e)) => (m, e) }
-    if (bad.isEmpty) return CheckReport(live.map(_._1), Seq.empty, 0L, Map.empty)
+    if (bad.isEmpty) return CheckReport(live.map(_.id), Seq.empty, 0L, Map.empty)
     if (!repair)
       throw new java.io.IOException(
-        s"corrupt segments [${bad.map(_._1._1).mkString(",")}] in $dir — " +
+        s"corrupt segments [${bad.map(_._1.id).mkString(",")}] in $dir — " +
           s"first failure: ${bad.head._2}; run check(repair = true) to exorcise them")
     bad.foreach { case (m, _) =>
       Seq("docs", "postings").foreach { sub =>
-        val src = new Path(s"$dir/$sub/segment=${m._1}")
+        val src = new Path(s"$dir/$sub/segment=${m.id}")
         if (fs.exists(src)) {
           fs.mkdirs(new Path(s"$dir/corrupt/$sub"))
-          require(fs.rename(src, new Path(s"$dir/corrupt/$sub/segment=${m._1}")),
+          require(fs.rename(src, new Path(s"$dir/corrupt/$sub/segment=${m.id}")),
             s"quarantine rename failed: $src")
         }
       }
     }
     import spark.implicits._
     val markers = bad.map { case (m, _) =>
-      CheckpointedBuild.SegmentMeta(m._1.toInt, 0L, 0L, 0L, 0L, 0.0, "superseded", 0L)
+      CheckpointedBuild.SegmentMeta(m.id.toInt, 0L, 0L, 0L, 0L, 0.0, "superseded", 0L)
     }
     spark.createDataset(markers).coalesce(1).write.mode("append").parquet(s"$dir/segments")
     refresh()
-    CheckReport(live.map(_._1), bad.map(_._1._1), bad.map(_._1._3).sum,
-      bad.map { case (m, e) => m._1 -> e }.toMap)
+    CheckReport(live.map(_.id), bad.map(_._1.id), bad.map(_._1.docsIndexed).sum,
+      bad.map { case (m, e) => m.id -> e }.toMap)
   }
 
   /** Fold the given segments into ONE new segment. docIds are global (each
@@ -824,24 +789,21 @@ final class Indexer(
     * an orphan directory that open() never serves (it reads live lineage
     * ids only) and that a retry overwrites.
     */
-  private def mergeSegments(metas: Seq[(Long, Long, Long, Long, Long)]): Unit = {
+  private def mergeSegments(metas: Seq[LiveSegment], newId: Long): Unit = {
     require(metas.nonEmpty)
     import spark.implicits._
-    val ids = metas.map(_._1)
-    val newId = nextSegId
+    val ids = metas.map(_.id)
     val t0 = System.nanoTime()
     val delOpt =
       if (fs.exists(new Path(s"$dir/deletes")))
-        Some(spark.read.parquet(s"$dir/deletes").select("docId").distinct())
+        Some(IndexBuilder.readDeletes(spark, s"$dir/deletes").distinct())
       else None
     val docs0 = spark.read.option("mergeSchema", "true").parquet(s"$dir/docs")
       .filter(col("segment").isin(ids: _*)).drop("segment")
     val docs = delOpt.fold(docs0)(d => docs0.join(d, Seq("docId"), "left_anti"))
-    docs.write.mode("overwrite").parquet(s"$dir/docs/segment=$newId")
+    val n = CheckpointedBuild.writeDocs(docs, s"$dir/docs/segment=$newId")
 
-    val blockCols = Seq("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf",
-      "sumTf", "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob",
-      "payloadsBlob", "offsetsBlob")
+    val blockCols = IndexBuilder.PostingColumns
     val blocks0 = IndexBuilder.readPostings(spark, s"$dir/postings")
       .filter(col("segment").isin(ids: _*))
       .select(blockCols.map(col): _*)
@@ -867,14 +829,11 @@ final class Indexer(
         }
         .toDF(blockCols: _*)
     }
-    blocks.write.mode("overwrite").parquet(s"$dir/postings/segment=$newId")
-
-    val n = spark.read.parquet(s"$dir/docs/segment=$newId").count()
-    val (np, nb) = CheckpointedBuild.segmentMetrics(
-      spark.read.parquet(s"$dir/postings/segment=$newId"))
-    val rows = CheckpointedBuild.SegmentMeta(newId.toInt, metas.map(_._2).min, n, np, nb,
-        (System.nanoTime() - t0) / 1e9, "merged",
-        maxDocId = metas.map(_._5).max) +: // union of source intervals, metadata-only
+    val m = CheckpointedBuild.writeBlocks(blocks, schema, s"$dir/postings/segment=$newId")
+    val rows = CheckpointedBuild.SegmentMeta(newId.toInt, metas.map(_.firstDocId).min, n,
+        m.postingsWritten, m.bytesCompressed, (System.nanoTime() - t0) / 1e9, "merged",
+        maxDocId = metas.map(_.maxDocId).max, // union of source intervals, metadata-only
+        fieldStats = Some(m.fieldStats)) +:
       ids.map(id => CheckpointedBuild.SegmentMeta(id.toInt, 0L, 0L, 0L, 0L, 0.0, "superseded", 0L))
     // ONE append publishes the merge atomically (merged row + all markers in
     // a single part-file): readers see the fold entirely or not at all
@@ -910,9 +869,7 @@ final class Indexer(
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).map(_.getPath.getName).filterNot(_.startsWith("_")).sorted.toSeq
     }
-    val segs =
-      if (!fs.exists(new Path(s"$dir/segments"))) Seq.empty[Long]
-      else StreamingIndexer.liveSegmentIds(spark, dir).sorted // merged-away dirs stay pinned via old pins only
+    val segs = Lineage.read(spark, dir).liveIds // merged-away dirs stay pinned via old pins only
     // epoch = the archive generation the NEXT compact would move this commit
     // to; segment ids restart per compaction, so the epoch disambiguates a
     // pre-compact pin's segment=0 from a post-compact live segment=0
@@ -961,7 +918,7 @@ final class Indexer(
     // keep only the pinned segments' COMMIT rows: a "superseded" marker is
     // a post-pin merge publishing — copying it would make the destination
     // read its own pinned segments as dead (and open empty)
-    spark.read.parquet(resolve("segments").toString)
+    spark.read.schema(Lineage.Schema).parquet(resolve("segments").toString)
       .filter(col("segmentId").isin(pin.segmentIds.map(_.toInt): _*) &&
         col("status") =!= "superseded")
       .write.mode("overwrite").parquet(s"$dst/segments")
@@ -974,15 +931,8 @@ final class Indexer(
     * `indexer.segments`, tests/test_engine.py:673,684 — observable proof
     * that docvalue-only updates do NOT write segments).
     */
-  def segments: Map[Int, Long] = {
-    if (!fs.exists(new Path(s"$dir/segments"))) return Map.empty
-    val live = StreamingIndexer.liveSegmentIds(spark, dir).map(_.toInt).toSet
-    spark.read.parquet(s"$dir/segments")
-      .filter(col("status") =!= "superseded")
-      .groupBy("segmentId").agg(max("docsIndexed").as("d"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1))
-      .filter(kv => live.contains(kv._1)).toMap
-  }
+  def segments: Map[Int, Long] =
+    Lineage.read(spark, dir).live.map(m => m.id.toInt -> m.docsIndexed).toMap
 
   def refresh(): Unit = {
     if (nrt) { nrtBuf = buf.toList; nrtDeletes = pendingDeletes.toList }
@@ -991,7 +941,7 @@ final class Indexer(
 
   def count(q: Query): Long = searcher.count(q)
   def search(q: Query, k: Int = 10) = searcher.search(q, k)
-  def version: Long = StreamingIndexer.version(spark, dir)
+  def version: Long = Lineage.read(spark, dir).version
 
   /** Wall-clock of the last durable commit, epoch seconds (reference
     * IndexReader.timestamp, indexers.py:117-126 — Lucene reads the commit's

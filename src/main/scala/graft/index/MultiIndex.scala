@@ -28,13 +28,7 @@ object MultiIndex {
       ix.blocks.map(b => b.copy(firstDocId = b.firstDocId + off, lastDocId = b.lastDocId + off))
     }.reduce(_ unionAll _)
     val termDict = IndexBuilder.termDictOf(blocks)
-    val stats = indexes.map(_.fieldStats).reduce { (a, b) =>
-      (a.keySet ++ b.keySet).map { k =>
-        val x = a.getOrElse(k, FieldStats(0, 0))
-        val y = b.getOrElse(k, FieldStats(0, 0))
-        k -> FieldStats(x.docCount + y.docCount, x.sumTotalTermFreq + y.sumTotalTermFreq)
-      }.toMap
-    }
+    val stats = FieldStats.sum(indexes.map(_.fieldStats))
     // per-reader liveDocs survive the union (reference MultiSearcher respects
     // each subreader's tombstones): rebase each index's deleted docIds by its
     // offset and carry the union

@@ -442,7 +442,12 @@ object Dedup {
         // r8.1 reshape (the [[lshCandidates]] argument): metrics on the
         // aggregated size table (identical values), prune via LEFT-ANTI
         // against only the over-cap cell ids — offenders-only join payload
-        // instead of every cell's size on every row.
+        // instead of every cell's size on every row. One difference from the
+        // old inner join + size filter: the left-anti join KEEPS rows whose
+        // cell is null, which the inner join dropped. Harmless today: a null
+        // cell comes only from a null vector, and such a row can never pair,
+        // because the candidate equi-join below (a.cell === b.cell) never
+        // matches null. The pair output is therefore the same either way.
         // unique observation name per invocation: two capped dedups in ONE
         // plan (a union of pipelines) would otherwise collide on the name
         val sizes = cellsIn.groupBy("cell").agg(count(lit(1)).as("__csz"))

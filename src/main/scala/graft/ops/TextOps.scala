@@ -102,9 +102,15 @@ object TextOps {
     * backreferences) so a SQL oracle can run the IDENTICAL regexes; the
     * category order is fixed (emails → IPs → phones) and each count is
     * taken on the PREVIOUS category's redacted text, since an email's host
-    * part can itself parse as an IPv4 (`a@1.2.3.4.com`). Everything is
-    * native `regexp_replace`/`regexp_extract_all` — codegen'd, no UDF.
-    * Returns struct(clean, n_emails, n_ips, n_phones).
+    * part can itself parse as an IPv4 (`a@1.2.3.4.com`). One Scala UDF
+    * walks a java.util.regex matcher once per category, counting and
+    * replacing in the same pass. Its output is bit-identical to the
+    * `regexp_replace` + `regexp_extract_all` pair the SQL oracle runs:
+    * Spark's RegExpReplace/RegExpExtractAll use the same java.util.regex
+    * engine with the same patterns, no flags and non-overlapping find()
+    * semantics, and the placeholders hold no `$`/`\` escapes.
+    * Returns struct(clean, n_emails, n_ips, n_phones); a NULL text gives a
+    * non-NULL struct whose four fields are NULL.
     */
   def redactPii(text: Column): Column = {
     // ONE matcher walk per category does the count AND the replacement

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -33,83 +32,67 @@ object StreamingIndexer {
       .start()
 
   /** Write one batch as segment `segId` (idempotent: overwrite by id). */
-  def appendSegment(batch: DataFrame, schema: IndexSchema, dir: String, segId: Long): Unit = {
-    if (batch.isEmpty) return
+  def appendSegment(batch: DataFrame, schema: IndexSchema, dir: String, segId: Long): Unit =
+    if (!batch.isEmpty) appendSegment(batch, schema, dir, segId, Lineage.read(batch.sparkSession, dir))
+
+  /** [[appendSegment]] of a non-empty batch against an already-read lineage.
+    * The docId offset comes from the lineage rows, and the lineage row's
+    * metrics (docs, postings, bytes, field stats) are observed on the docs
+    * and blocks writes themselves — no re-read of the committed files.
+    */
+  private[graft] def appendSegment(batch: DataFrame, schema: IndexSchema, dir: String,
+      segId: Long, lineage: Lineage): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // docId offset = docs committed by prior segments, rounded up to a salt
-    // bucket so rebased blocks stay WAND-co-partitionable (dedup replayed rows)
-    // ATOM segments only (status "committed"): a merged segment's docs reuse
-    // its sources' docId ranges, so counting it would double the offset and
-    // every post-merge append would leak an unbounded docId gap
-    val offset =
-      if (!fs.exists(new Path(s"$dir/segments"))) 0L
-      else {
-        val rows = spark.read.parquet(s"$dir/segments")
-          .filter(col("segmentId") < segId && col("status") === "committed")
-          .groupBy("segmentId").agg(max("docsIndexed").as("d"))
-          .agg(sum(IndexBuilder.nextBucketStartCol(col("d")))).collect()
-        if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-      }
-
+    val offset = lineage.appendOffset(segId)
     val t0 = System.nanoTime()
     val localDocs = IndexBuilder.prepareDocs(batch, schema, parts)
       .withColumn("docId", col("docId") + offset)
-    localDocs.write.mode("overwrite").parquet(s"$dir/docs/segment=$segId")
-    val docsBack = spark.read.parquet(s"$dir/docs/segment=$segId")
-    IndexBuilder.blocksOf(IndexBuilder.tokensOf(docsBack, schema), schema, parts)
-      .write.mode("overwrite").parquet(s"$dir/postings/segment=$segId")
-    val n = docsBack.count()
-    val (nPostings, nBytes) =
-      CheckpointedBuild.segmentMetrics(spark.read.parquet(s"$dir/postings/segment=$segId"))
+    val docsDir = s"$dir/docs/segment=$segId"
+    val n = CheckpointedBuild.writeDocs(localDocs, docsDir)
+    // tokenize the committed docs (declared schema: no footer inference)
+    val docsBack = spark.read.schema(localDocs.schema).parquet(docsDir)
+    val m = CheckpointedBuild.writeBlocks(
+      IndexBuilder.blocksOf(IndexBuilder.tokensOf(docsBack, schema), schema, parts),
+      schema, s"$dir/postings/segment=$segId")
     val meta = CheckpointedBuild.SegmentMeta(segId.toInt, offset, n,
-      nPostings, nBytes, (System.nanoTime() - t0) / 1e9, "committed",
-      maxDocId = offset + n - 1) // prepareDocs assigns dense [0, n) + offset
+      m.postingsWritten, m.bytesCompressed, (System.nanoTime() - t0) / 1e9, "committed",
+      maxDocId = offset + n - 1, // prepareDocs assigns dense [0, n) + offset
+      fieldStats = Some(m.fieldStats))
     spark.createDataset(Seq(meta)).write.mode("append").parquet(s"$dir/segments")
   }
 
   /** Open the current committed view (call again to refresh — reference
-    * `reopen`/`openIfChanged` ≈ re-resolving the latest snapshot).
+    * `reopen`/`openIfChanged` ≈ re-resolving the latest snapshot). Reads the
+    * lineage once; field stats sum the live segments' lineage rows, so the
+    * open never aggregates postings.
     */
   def open(spark: SparkSession, dir: String, schema: IndexSchema): Index = {
-    import spark.implicits._
     // read ONLY live segments (partition-pruned): a merge supersedes its
     // sources in the lineage but leaves their directories on disk for pins —
     // and a merge that crashed pre-lineage leaves an orphan dir that must
     // not be served
-    val live = liveSegmentIds(spark, dir)
+    val lineage = Lineage.read(spark, dir)
+    val live = lineage.liveIds
     val docs = spark.read.option("mergeSchema", "true").parquet(s"$dir/docs")
       .filter(col("segment").isin(live: _*)).drop("segment")
-    val blocks = IndexBuilder.readPostings(spark, s"$dir/postings")
+    val postings = IndexBuilder.readPostings(spark, s"$dir/postings")
       .filter(col("segment").isin(live: _*))
-      .select("field", "term", "firstDocId", "lastDocId", "numDocs", "maxTf", "sumTf",
-        "minDlq", "docsBlob", "freqsBlob", "normsBlob", "positionsBlob", "payloadsBlob", "offsetsBlob")
-      .as[PostingBlock]
+    val blocks = IndexBuilder.asBlocks(postings)
     new Index(spark, schema, docs, blocks, IndexBuilder.termDictOf(blocks),
-      IndexBuilder.fieldStatsOf(blocks))
+      lineage.fieldStats(postings))
   }
 
   /** Segment ids the committed view serves: ids with a "committed"/"merged"
     * lineage row and no "superseded" marker (their directories were folded
     * into a merged segment and remain on disk only for pinned commits).
     */
-  def liveSegmentIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val byId = spark.read.parquet(s"$dir/segments")
-      .groupBy("segmentId")
-      .agg(max(when(col("status") === "superseded", 1).otherwise(0)).as("dead"))
-    byId.filter(col("dead") === 0).select("segmentId")
-      .collect().map(_.getInt(0).toLong).toSeq
-  }
+  def liveSegmentIds(spark: SparkSession, dir: String): Seq[Long] =
+    Lineage.read(spark, dir).liveIds
 
   /** Monotone version for cache validation (reference `version`): the
     * number of committed segments.
     */
-  def version(spark: SparkSession, dir: String): Long = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/segments"))) 0L
-    else spark.read.parquet(s"$dir/segments").select("segmentId").distinct().count()
-  }
+  def version(spark: SparkSession, dir: String): Long = Lineage.read(spark, dir).version
 }

@@ -339,4 +339,132 @@ class MergeSpec extends SparkTestBase {
     assert(w.count(Term("content", "alpha")) === 3L)
     w.close()
   }
+
+  /** The reopened view's stats, which come from lineage rows, equal an
+    * aggregate over the view's own posting blocks.
+    */
+  private def assertLineageStats(w: Indexer, step: String): Unit = {
+    val ix = w.searcher.index
+    assert(ix.fieldStats.nonEmpty, step)
+    assert(ix.fieldStats === IndexBuilder.fieldStatsOf(ix.blocks), step)
+  }
+
+  test("lineage field stats equal the view's block aggregate after every write path") {
+    val dir = Files.createTempDirectory("graft-linstats").toString
+    val w = writer(dir)
+    for (d <- 0 until 6) addDoc(w, s"a$d", s"alpha one common word$d", if (d % 2 == 0) "en" else "de")
+    w.commit(); assertLineageStats(w, "add + commit")
+    for (d <- 0 until 4) addDoc(w, s"b$d", s"beta two common extra$d words here")
+    w.commit(); assertLineageStats(w, "second commit")
+    w.update(Term("content", "word1"),
+      "repo" -> "r", "path" -> "a1", "commit" -> "c", "lang" -> "en", "content" -> "alpha replaced")
+    w.commit(); assertLineageStats(w, "update")
+    w.delete(Term("content", "extra2"))
+    w.commit(); assertLineageStats(w, "delete")
+    w.forceMerge(2); assertLineageStats(w, "forceMerge")
+    w.forceMergeDeletes(); assertLineageStats(w, "forceMergeDeletes")
+    // a merge that purges every doc of its only source writes an empty segment
+    for (d <- 0 until 3) addDoc(w, s"d$d", s"delta gone$d")
+    w.commit()
+    w.delete(Term("content", "delta"))
+    w.commit()
+    w.forceMergeDeletes(); assertLineageStats(w, "forceMergeDeletes of an all-deleted segment")
+    assert(w.segments.values.toSeq.contains(0L))
+    for (d <- 0 until 3) addDoc(w, s"c$d", s"gamma three common tail$d")
+    w.commit()
+    // corrupt the newest segment so the repair really drops its stats
+    val victim = StreamingIndexer.liveSegmentIds(spark, dir).max
+    val part = new java.io.File(s"$dir/postings/segment=$victim").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.write(part.toPath, Array.fill[Byte](128)(0x5a.toByte))
+    assert(w.check(repair = true).badSegments === Seq(victim))
+    assertLineageStats(w, "check(repair = true)")
+    // 6 + 4 docs + 1 re-add, less the 2 tombstoned docs the merges purged
+    assert(w.searcher.index.fieldStats("content").docCount === 9L)
+    w.compact(); assertLineageStats(w, "compact")
+    w.close()
+  }
+
+  test("lineage rows without field stats (older layout) open with the same stats and scores") {
+    val dir = Files.createTempDirectory("graft-linlegacy").toString
+    val w = writer(dir)
+    for (s <- 0 until 3) {
+      for (d <- 0 to s + 2) addDoc(w, s"p$s-$d", s"alpha seg$s common term$d data", if (d % 2 == 0) "en" else "de")
+      w.commit()
+    }
+    w.delete(Term("content", "term1")); w.commit()
+    val queries = Seq(Term("content", "common"), Term("content", "seg1"),
+      Query.any(Term("content", "alpha"), Term("content", "term2")), Term("lang", "de"))
+    def top10(x: Indexer): Seq[Seq[(Long, Double)]] = queries.map(q =>
+      x.search(q, 10).collect().map(r => (r.getLong(0), r.getAs[Double]("score"))).toSeq)
+    assertLineageStats(w, "before the rewrite")
+    val stats0 = w.searcher.index.fieldStats
+    val scores0 = top10(w)
+    w.close()
+    // rewrite the lineage in the older shape: the same rows, no stats column
+    val tmp = s"$dir/segments-legacy"
+    spark.read.parquet(s"$dir/segments").drop("fieldStats").write.parquet(tmp)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/segments"), true)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(s"$dir/segments")))
+    assert(!spark.read.parquet(s"$dir/segments").columns.contains("fieldStats"))
+
+    val r = new Indexer(spark, dir, idxSchema, srcSchema, readOnly = true)
+    assert(r.searcher.index.fieldStats === stats0)
+    assert(top10(r) === scores0)
+    // a segment written beside legacy rows: both kinds feed one sum
+    val w2 = writer(dir)
+    addDoc(w2, "fresh", "alpha fresh common")
+    w2.commit()
+    assertLineageStats(w2, "legacy + new rows")
+    assert(w2.searcher.index.fieldStats("content").docCount === stats0("content").docCount + 1)
+    w2.close()
+  }
+
+  test("commit with a pending delete plus the reopen reads lineage, not postings: job budget") {
+    val dir = Files.createTempDirectory("graft-linjobs").toString
+    val w = writer(dir)
+    for (s <- 0 until 3) {
+      for (d <- 0 until 4) addDoc(w, s"p$s-$d", s"alpha seg$s common uniq$s$d")
+      w.commit()
+    }
+    assert(StreamingIndexer.liveSegmentIds(spark, dir).length === 3)
+    w.searcher // the view a serving loop already holds
+    addDoc(w, "new", "alpha fresh")
+    w.delete(Term("content", "uniq01"))
+    val jobs = jobsOf { w.commit(); w.searcher }
+    assert(w.count(Term("content", "uniq01")) === 0L && w.count(Term("content", "fresh")) === 1L)
+    // measured: 17 jobs; 43 when each lineage question ran its own
+    // schema-inferred aggregate and the reopen aggregated every posting block
+    assert(jobs <= 17, s"commit + reopen ran $jobs Spark jobs")
+    w.close()
+  }
+
+  /** Spark jobs `body` submits from this thread. Jobs are tagged by job
+    * group; a tagged sentinel job drains the asynchronous listener bus
+    * before the count is read.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group`                      => counted.incrementAndGet(); ()
+          case g if g == s"$group-sentinel" => drained.countDown()
+          case _                            =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      counted.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
