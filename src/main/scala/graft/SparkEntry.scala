@@ -372,11 +372,12 @@ object SparkEntry {
           when(col("doc_id") % 19 === 0,
             concat(lit(" call +1 555-01"), col("doc_id") % 100, lit(" now")))
             .otherwise(lit(""))).as("t"))
-      val r = graft.ops.TextOps.redactPii(col("t"))
-      withPii.select(col("doc_id"), r.getField("clean").as("clean"),
-        r.getField("n_emails").cast("long").as("n_emails"),
-        r.getField("n_ips").cast("long").as("n_ips"),
-        r.getField("n_phones").cast("long").as("n_phones"))
+      // the struct is projected once, then read field by field
+      withPii.select(col("doc_id"), graft.ops.TextOps.redactPii(col("t")).as("r"))
+        .select(col("doc_id"), col("r.clean").as("clean"),
+          col("r.n_emails").cast("long").as("n_emails"),
+          col("r.n_ips").cast("long").as("n_ips"),
+          col("r.n_phones").cast("long").as("n_phones"))
     }),
     // C4 line/page cleaning (Raffel et al. 2020 §2.2): the corpus rows are
     // single terminator-free lines, so the contract builds 5-line pages

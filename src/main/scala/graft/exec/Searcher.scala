@@ -73,14 +73,89 @@ object Searcher {
       else levenshtein(col("term"), lit(q))
     lenOk && prefOk && (dist <= maxEdits)
   }
+
+  /** A phrase/near query ready for either top-k route: its field, distinct
+    * terms rarest-first, their positions total (Σ totalTermFreq), the summed
+    * idf weight, avgdl, and the per-doc match frequency over the position
+    * lists in `dfOrder` order.
+    */
+  private[exec] final case class PositionalPlan(field: String, dfOrder: Seq[String],
+      positions: Long, weight: Double, avgdl: Double, freq: Array[Array[Int]] => Double)
+
+  /** A top-k from one driver pass: hits in (score desc, docId asc) order,
+    * live docs scored, and whether a match went unscored (WAND pruning).
+    */
+  private[exec] final case class LocalTop(hits: Seq[(Long, Double)], scored: Long, pruned: Boolean) {
+    /** Lucene TotalHits: exact when nothing was pruned; otherwise a pruned
+      * run implies a full heap, so matches ≥ k and max(scored, k) is a
+      * valid lower bound.
+      */
+    def total(k: Int): TotalHits =
+      if (!pruned) TotalHits(scored, exact = true)
+      else TotalHits(math.max(scored, k.toLong), exact = false)
+  }
+
+  private[exec] val NoHits = LocalTop(Nil, 0L, pruned = false)
+
+  private[exec] val HitSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("docId", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false)))
+  }
+
+  /** Postings held by the looked-up terms (Σ docFreq). */
+  private[exec] def postingsOf(stats: Map[String, (Long, Long)]): Long =
+    stats.valuesIterator.map(_._1).sum
+
+  /** Positions held by the looked-up terms (Σ totalTermFreq). */
+  private[exec] def positionsOf(stats: Map[String, (Long, Long)]): Long =
+    stats.valuesIterator.map(_._2).sum
+
+  /** Membership test over a sorted docId array (liveDocs). */
+  private[exec] def memberOf(sorted: Array[Long]): Long => Boolean =
+    d => java.util.Arrays.binarySearch(sorted, d) >= 0
+
+  /** The best k of `matches` by (score desc, docId asc) through a bounded
+    * heap, and how many matches there were.
+    */
+  private[exec] def topOf(matches: Iterator[(Long, Double)], k: Int): (Seq[(Long, Double)], Long) = {
+    // head = worst kept entry: smallest score, then largest docId
+    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
+      Ordering.by((sd: (Double, Long)) => (-sd._1, sd._2)))
+    var n = 0L
+    matches.foreach { case (d, s) =>
+      n += 1
+      if (heap.size < k) heap.enqueue((s, d))
+      else if (s > heap.head._1 || (s == heap.head._1 && d < heap.head._2)) {
+        heap.dequeue()
+        heap.enqueue((s, d))
+      }
+    }
+    (heap.dequeueAll[(Double, Long)].reverseIterator.map(sd => (sd._2, sd._1)).toSeq, n)
+  }
 }
 
 /** Query evaluation over an [[Index]]: every query node evaluates to a
   * DataFrame of (docId, score) with one row per matching doc, composed with
   * plain Catalyst operators (union + hash-aggregate for boolean algebra —
-  * one shuffle per boolean level, no cascaded joins; TakeOrderedAndProject
-  * for top-k). Mirrors the reference searcher surface
-  * (/root/reference/lupyne/engine/indexers.py:314-461).
+  * one shuffle per boolean level, no cascaded joins). Mirrors lupyne's
+  * IndexSearcher surface (engine/indexers.py:314-461).
+  *
+  * Relevance top-k (`search`, `searchWand`, `searchHits` with k > 0, no
+  * sorts, no select) has two routes for the shapes the block kernels serve:
+  * a Term, SHOULD-of-terms or DisMax (block-max [[Wand]]), a single-field
+  * pure term conjunction with same-field MUST_NOT terms ([[Conjunction]]),
+  * and Phrase/Near ([[PhraseMatcher]]).
+  *  - Local: when the query's terms hold at most `maxLocalTopKPostings`
+  *    postings (Σ docFreq from the idf lookup; Σ totalTermFreq for
+  *    phrase/near), one filtered, column-pruned scan collects their
+  *    compressed blocks and the kernel runs once on the driver. The scan and scoring run inside the `search` call (eager);
+  *    the sorted top-k comes back as a local DataFrame. One job, no shuffle.
+  *  - Distributed: above that cap, or when the tombstones overflow
+  *    `wandMaxTombstones`, the blocks co-partition by docId salt bucket, the
+  *    same kernels run per partition and a TakeOrdered merges.
+  * Every other query, and `eval`-based operations (count, facets, groupBy,
+  * delete), run through `eval` (+ TakeOrderedAndProject for top-k).
   */
 class Searcher(val index: Index) extends Serializable {
   private val spark = index.spark
@@ -101,6 +176,26 @@ class Searcher(val index: Index) extends Serializable {
       .select(col("firstDocId"), col("numDocs"), col("docsBlob"), col("freqsBlob"), col("normsBlob"))
       .as[(Long, Int, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (f, n, d, fr, no) => PostingCodec.decodeScore(f, n, d, fr, no) }
+  }
+
+  /** The one projection of posting blocks that the block kernels read, on
+    * both top-k routes: the rows of `keys` (field, term) with the scoring
+    * columns, `positionsBlob` only when `withPositions`, payloads and
+    * offsets never — parquet reads only the columns kept. Rows have the
+    * [[PostingBlock]] shape, so the local route collects them as is and the
+    * distributed route shuffles them as is.
+    */
+  private def fetchBlocks(keys: Seq[(String, String)], withPositions: Boolean): DataFrame = {
+    val cond = keys.map(_._1).distinct.map { f =>
+      col("field") === f && col("term").isin(keys.collect { case (`f`, t) => t }.distinct: _*)
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    val none = lit(Array.emptyByteArray)
+    index.blocks.filter(cond).select(
+      col("field"), col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
+      col("maxTf"), col("sumTf"), col("minDlq"),
+      col("docsBlob"), col("freqsBlob"), col("normsBlob"),
+      (if (withPositions) col("positionsBlob") else none).as("positionsBlob"),
+      none.as("payloadsBlob"), none.as("offsetsBlob"))
   }
 
   /** docFreq fast path: O(dictionary lookup), no postings scan
@@ -354,32 +449,15 @@ class Searcher(val index: Index) extends Serializable {
     */
   private def evalTermConjunction(field: String, mustTerms: Seq[String],
       filterTerms: Seq[String], notQueries: Seq[Query] = Nil): DataFrame = {
-    val st = index.fieldStats.getOrElse(field, return emptyMatches)
-    val mustCounts = mustTerms.groupBy(identity).view.mapValues(_.size).toMap
-    val distinct = (mustTerms ++ filterTerms).distinct
-    val stats = termStats(field, distinct)
-    if (distinct.exists(!stats.contains(_))) return emptyMatches
-    val order = distinct.sortBy(t => (stats(t)._1, t))
-    // duplicate MUST clauses sum like Lucene's BooleanQuery (idf × count)
-    val weights: Map[String, Double] = distinct.map { t =>
-      t -> mustCounts.getOrElse(t, 0) * Bm25.idf(st.docCount, stats(t)._1)
-    }.toMap
+    val (ord, w, avgdl) = conjunctionPlan(field, mustTerms, filterTerms)
+      .getOrElse(return emptyMatches)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
-    val prune = rareCoveragePruner(field, order.head)
-    val ord = order.toArray
-    val w = weights
-    val avgdl = st.avgdl
-    val base = prune(index.blocks
-      .filter(col("field") === field && col("term").isin(order: _*))
-      // positions blob projected away before the shuffle (score-only decode)
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("sumTf"), col("minDlq"),
-        col("docsBlob"), col("freqsBlob"), col("normsBlob")))
-      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .map(t => PostingBlock(field, t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-        t._8, t._9, t._10, Array.empty[Byte]))
+    val prune = rareCoveragePruner(field, ord.head)
+    // positions blob projected away before the shuffle (score-only decode)
+    val base = prune(fetchBlocks(ord.toSeq.map((field, _)), withPositions = false))
       .repartition(parts, bucket)
+      .as[PostingBlock]
       .mapPartitions(it => Conjunction.scorePartition(ord, w, avgdl, it))
       .toDF("docId", "score")
     // MUST_NOT anti-joins run docIds-only (no freq/norm decode) and — for
@@ -394,6 +472,41 @@ class Searcher(val index: Index) extends Serializable {
       }
       d.join(notIds, Seq("docId"), "left_anti")
     }
+  }
+
+  /** Scoring plan of a pure term conjunction, shared by both routes: the
+    * distinct terms rarest-first, their BM25 weights and avgdl. Duplicate
+    * MUST clauses sum like Lucene's BooleanQuery (idf × count); FILTER
+    * terms weigh 0. None when the field or any term is absent (no match).
+    */
+  private def conjunctionPlan(field: String, mustTerms: Seq[String],
+      filterTerms: Seq[String]): Option[(Array[String], Map[String, Double], Double)] = {
+    val st = index.fieldStats.getOrElse(field, return None)
+    val mustCounts = mustTerms.groupBy(identity).view.mapValues(_.size).toMap
+    val distinct = (mustTerms ++ filterTerms).distinct
+    val stats = termStats(field, distinct)
+    if (distinct.exists(!stats.contains(_))) return None
+    val weights: Map[String, Double] = distinct.map { t =>
+      t -> mustCounts.getOrElse(t, 0) * Bm25.idf(st.docCount, stats(t)._1)
+    }.toMap
+    Some((distinct.sortBy(t => (stats(t)._1, t)).toArray, weights, st.avgdl))
+  }
+
+  /** (field, MUST terms, FILTER terms, MUST_NOT clauses) when the clauses
+    * form a pure term conjunction: ≥ 2 MUST/FILTER Terms of one field, no
+    * SHOULD, MUST_NOT clauses of any kind.
+    */
+  private def termConjunction(clauses: Seq[(Occur.Value, Query)]):
+      Option[(String, Seq[String], Seq[String], Seq[Query])] = {
+    val positives = clauses.filter(c => c._1 == Occur.Must || c._1 == Occur.Filter)
+    val posTerms = positives.collect { case (o, Term(f, t)) => (o, f, t) }
+    if (!clauses.exists(_._1 == Occur.Should) && positives.length >= 2 &&
+        posTerms.length == positives.length && posTerms.map(_._2).distinct.length == 1)
+      Some((posTerms.head._2,
+        posTerms.collect { case (Occur.Must, _, t) => t },
+        posTerms.collect { case (Occur.Filter, _, t) => t },
+        clauses.collect { case (Occur.MustNot, q) => q }))
+    else None
   }
 
   /** docId-only postings decode (docsBlob alone — no freqs/norms read). */
@@ -425,6 +538,19 @@ class Searcher(val index: Index) extends Serializable {
     * fallback plan.
     */
   private[graft] var maxRareDriverBlocks = 4096
+
+  /** Size cap of the local top-k route (class doc): a kernel-shaped top-k
+    * is collected and scored on the driver when its terms hold at most this
+    * many postings — Σ docFreq for term/or/DisMax/conjunction shapes, and
+    * Σ totalTermFreq for phrase/near, whose collected volume is their
+    * position lists. Above it the distributed route runs. 524,288 is the
+    * warm top-10 crossover measured on a 4-core `local[4]` JVM: there the
+    * local route stays faster up to ~0.5-0.6M postings for term/or/and and
+    * ~1-3M positions for phrase (README, Top-k). Test-visible so specs can
+    * force the distributed route (0) with every other knob at its
+    * production value.
+    */
+  private[graft] var maxLocalTopKPostings: Long = 512L * 1024
 
   /** Memoized per (field, term): the rare term's block ranges are immutable
     * for an index view, so repeated conjunctive/positional queries skip the
@@ -485,15 +611,8 @@ class Searcher(val index: Index) extends Serializable {
     if (clauses.isEmpty) return emptyMatches
     // Route ALL-positive-term-conjunctions (≥2 clauses, one field, no SHOULD)
     // through the merge-intersect fast path; MUST_NOT clauses anti-join after.
-    val positives = clauses.filter(c => c._1 == Occur.Must || c._1 == Occur.Filter)
-    val posTerms = positives.collect { case (o, Term(f, t)) => (o, f, t) }
-    if (!clauses.exists(_._1 == Occur.Should) && positives.length >= 2 &&
-        posTerms.length == positives.length && posTerms.map(_._2).distinct.length == 1) {
-      val field = posTerms.head._2
-      return evalTermConjunction(field,
-        posTerms.collect { case (Occur.Must, _, t) => t },
-        posTerms.collect { case (Occur.Filter, _, t) => t },
-        clauses.collect { case (Occur.MustNot, q) => q })
+    termConjunction(clauses).foreach { case (field, must, filter, nots) =>
+      return evalTermConjunction(field, must, filter, nots)
     }
     val numRequired = clauses.count(c => c._1 == Occur.Must || c._1 == Occur.Filter)
     // ONE dictionary lookup for all direct Term clauses (instead of one
@@ -562,14 +681,12 @@ class Searcher(val index: Index) extends Serializable {
       dlqField: String): Dataset[(Long, Int, Array[Array[Int]])] = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val bucket = shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift)
-    val keys = required ++ optional
-    val cond = keys.map { case (f, t) => col("field") === f && col("term") === t }.reduce(_ || _)
-    val all = index.blocks.filter(cond)
+    val all = fetchBlocks(required ++ optional, withPositions = true)
     val pruned = required.headOption match {
       // literal range predicates when the rare term's blocks are few (no
       // extra job, pushed to the scan); distributed semi-join when not — see
       // rareCoveragePruner
-      case Some((rf, rt)) => rareCoveragePruner(rf, rt)(all.toDF()).as[PostingBlock]
+      case Some((rf, rt)) => rareCoveragePruner(rf, rt)(all)
       case None           => all
     }
     val req = required.toArray
@@ -577,6 +694,7 @@ class Searcher(val index: Index) extends Serializable {
     val dlqF = dlqField
     pruned
       .repartition(parts, bucket)
+      .as[PostingBlock]
       .mapPartitions(it => PhraseMatcher.intersectKeyed(req, opt, dlqF, it))
   }
 
@@ -591,13 +709,14 @@ class Searcher(val index: Index) extends Serializable {
     else Some((distinct.sortBy(t => (stats(t)._1, t)), stats))
   }
 
-  private def evalPhrase(p: Phrase): DataFrame = {
+  /** Phrase scoring plan (see [[Searcher.PositionalPlan]]); None ⇒ no match. */
+  private def phrasePlan(p: Phrase): Option[Searcher.PositionalPlan] = {
     // position placeholders (None) shift subsequent term offsets
     val withOffsets = p.terms.zipWithIndex.collect { case (Some(t), i) => (t, i) }
-    if (withOffsets.isEmpty) return emptyMatches
+    if (withOffsets.isEmpty) return None
     val field = p.field
-    val st = index.fieldStats.getOrElse(field, return emptyMatches)
-    val (dfOrder, stats) = positionalPlan(field, withOffsets.map(_._1)).getOrElse(return emptyMatches)
+    val st = index.fieldStats.getOrElse(field, return None)
+    val (dfOrder, stats) = positionalPlan(field, withOffsets.map(_._1)).getOrElse(return None)
     val sumWeight = withOffsets.map { case (t, _) => Bm25.idf(st.docCount, stats(t)._1) }.sum
     // lists pre-shifted by -offset so an exact match is an equal value
     val slot = dfOrder.zipWithIndex.toMap
@@ -605,32 +724,40 @@ class Searcher(val index: Index) extends Serializable {
     val so = p.slop
     val slotTerms = offs.map(_._1)
     val slotOffsets = offs.map(_._2)
-    val matched = positionalMatches(field, dfOrder)
-      .map { case (docId, dlq, lists) =>
-        val shifted = offs.map { case (s, off) => lists(s).map(_ - off) }
-        (docId, PhraseMatcher.phraseFreq(shifted, so, slotOffsets, slotTerms), dlq)
-      }
-      .filter(_._2 > 0.0)
-    matched.toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), sumWeight, st.avgdl).as("score"))
+    val freq = (lists: Array[Array[Int]]) => PhraseMatcher.phraseFreq(
+      offs.map { case (s, off) => lists(s).map(_ - off) }, so, slotOffsets, slotTerms)
+    Some(Searcher.PositionalPlan(field, dfOrder, Searcher.positionsOf(stats), sumWeight,
+      st.avgdl, freq))
   }
 
-  private def evalNear(q: Near): DataFrame = {
+  /** Near scoring plan (see [[Searcher.PositionalPlan]]); None ⇒ no match. */
+  private def nearPlan(q: Near): Option[Searcher.PositionalPlan] = {
     val field = q.field
-    val st = index.fieldStats.getOrElse(field, return emptyMatches)
-    val (dfOrder, stats) = positionalPlan(field, q.terms).getOrElse(return emptyMatches)
+    val st = index.fieldStats.getOrElse(field, return None)
+    val (dfOrder, stats) = positionalPlan(field, q.terms).getOrElse(return None)
     val sumWeight = q.terms.map(t => Bm25.idf(st.docCount, stats(t)._1)).sum
     val slot = dfOrder.zipWithIndex.toMap
     val slots: Array[Int] = q.terms.map(slot(_)).toArray
     val so = q.slop
     val io = q.inOrder
-    val matched = positionalMatches(field, dfOrder)
-      .map { case (docId, dlq, lists) =>
-        (docId, PhraseMatcher.nearFreq(slots.map(lists(_)), so, io), dlq)
-      }
+    val freq = (lists: Array[Array[Int]]) => PhraseMatcher.nearFreq(slots.map(lists(_)), so, io)
+    Some(Searcher.PositionalPlan(field, dfOrder, Searcher.positionsOf(stats), sumWeight,
+      st.avgdl, freq))
+  }
+
+  private def evalPhrase(p: Phrase): DataFrame =
+    phrasePlan(p).map(evalPositional).getOrElse(emptyMatches)
+
+  private def evalNear(q: Near): DataFrame =
+    nearPlan(q).map(evalPositional).getOrElse(emptyMatches)
+
+  private def evalPositional(pp: Searcher.PositionalPlan): DataFrame = {
+    val freq = pp.freq
+    positionalMatches(pp.field, pp.dfOrder)
+      .map { case (docId, dlq, lists) => (docId, freq(lists), dlq) }
       .filter(_._2 > 0.0)
-    matched.toDF("docId", "freq", "dlq")
-      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), sumWeight, st.avgdl).as("score"))
+      .toDF("docId", "freq", "dlq")
+      .select(col("docId"), Bm25.scoreCol(col("freq"), col("dlq"), pp.weight, pp.avgdl).as("score"))
   }
 
   // ------------------------------------------------------------ span algebra
@@ -698,9 +825,11 @@ class Searcher(val index: Index) extends Serializable {
 
   // ----------------------------------------------------------------- search
 
-  /** When true, pure term-disjunction top-k routes through the block-max
-    * WAND evaluator instead of exhaustive scoring (rank-identical; prunes
-    * non-competitive blocks undecoded).
+  /** When true, relevance top-k of the kernel shapes (class doc) takes the
+    * local or distributed kernel route — term disjunctions through the
+    * block-max WAND evaluator, which prunes non-competitive blocks undecoded.
+    * When false every top-k runs exhaustive `eval` scoring, the
+    * rank-identical reference the routes are tested against.
     */
   var wandEnabled = true
 
@@ -720,7 +849,12 @@ class Searcher(val index: Index) extends Serializable {
     * driver collect, no ceiling. The broadcast path stays preferred under
     * the cap because its one-time collect amortizes across every query on
     * this searcher; `forceMergeDeletes()`+`vacuumDeletes()` remain the
-    * operational pressure valve that restores it.
+    * operational pressure valve that restores it. The local top-k route
+    * filters against the same latched array, so every kernel-shaped top-k
+    * under `maxLocalTopKPostings` — conjunctions and phrase/near too, not
+    * only WAND shapes — latches this cap and, on a view with deletes, runs
+    * the one tombstone collect; beyond the cap such top-ks take the
+    * distributed route.
     *
     * LATCHES on the first search (the liveDocs set is computed once per
     * searcher, like a Lucene reader pinning its .liv bits): assigning it
@@ -801,36 +935,42 @@ class Searcher(val index: Index) extends Serializable {
     }
   }
 
-  /** Block-max WAND top-k over a weighted term disjunction: blocks of the
-    * query terms are co-partitioned by docId salt bucket (blocks never span
-    * one), each partition runs document-at-a-time BMW keeping k candidates,
-    * and a global TakeOrdered merges — one narrow shuffle of blocks, no
-    * groupBy, non-competitive blocks never decoded.
+  /** Block-max WAND top-k over a weighted term disjunction. Under the
+    * local-route cap the query's blocks are collected and one WAND pass
+    * runs on the driver; above it the blocks co-partition by docId salt
+    * bucket (blocks never span one), each partition runs document-at-a-time
+    * BMW keeping k candidates, and a global TakeOrdered merges — one narrow
+    * shuffle of blocks, no groupBy. Either way non-competitive blocks are
+    * never decoded.
     */
   def searchWand(field: String, weightedTerms: Seq[(String, Double)], k: Int,
-      tie: Double = 1.0): DataFrame = {
+      tie: Double = 1.0): DataFrame =
     bm25Weights(field, weightedTerms) match {
-      case None => emptyMatches
-      case Some((weights, avgdl)) =>
-        wandPartitions(field, weights, avgdl, k, tie)
-          .flatMap { case (ids, scores, _, _) => ids.zip(scores) }
-          .toDF("docId", "score")
-          .orderBy(col("score").desc, col("docId").asc)
-          .limit(k)
+      case None => localHits(Nil)
+      case Some((weights, avgdl, postings)) =>
+        localWand(field, weights, avgdl, postings, k, tie) match {
+          case Some(top) => localHits(top.hits)
+          case None =>
+            wandPartitions(field, weights, avgdl, k, tie)
+              .flatMap { case (ids, scores, _, _) => ids.zip(scores) }
+              .toDF("docId", "score")
+              .orderBy(col("score").desc, col("docId").asc)
+              .limit(k)
+        }
     }
-  }
 
-  /** Resolve a weighted term disjunction to BM25 weights (boost × idf);
-    * None when the field or every term is absent.
+  /** Resolve a weighted term disjunction to BM25 weights (boost × idf),
+    * avgdl and the terms' postings total (Σ docFreq); None when the field or
+    * every term is absent.
     */
   private def bm25Weights(field: String,
-      weightedTerms: Seq[(String, Double)]): Option[(Seq[(String, Double)], Double)] = {
+      weightedTerms: Seq[(String, Double)]): Option[(Seq[(String, Double)], Double, Long)] = {
     val st = index.fieldStats.getOrElse(field, return None)
     val stats = termStats(field, weightedTerms.map(_._1))
     val weights: Seq[(String, Double)] = weightedTerms.flatMap { case (t, b) =>
       stats.get(t).map { case (df, _) => t -> b * Bm25.idf(st.docCount, df) }
     }
-    if (weights.isEmpty) None else Some((weights, st.avgdl))
+    if (weights.isEmpty) None else Some((weights, st.avgdl, Searcher.postingsOf(stats)))
   }
 
   /** Per-partition WAND results: (top-k docIds, their scores, docs scored,
@@ -846,12 +986,8 @@ class Searcher(val index: Index) extends Serializable {
     val acc = wandDecoded // local val: the closure must not capture `this`
     val tomb = wandTombstones.orNull // Broadcast is serializable; `this` is not shipped
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val blockRows = index.blocks
-      .filter(col("field") === field && col("term").isin(weights.map(_._1).distinct: _*))
-      // scoring never needs positions: drop the widest blob before the shuffle
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("sumTf"), col("minDlq"),
-        col("docsBlob"), col("freqsBlob"), col("normsBlob"))
+    // scoring never needs positions: the widest blob stays out of the shuffle
+    val blockRows = fetchBlocks(weights.map(w => (field, w._1)), withPositions = false)
     // Broadcast-cap overflow: the deletes CO-SHUFFLE with the blocks on the
     // same salt bucket (blocks never span one), tagged numDocs = -1 — a real
     // block always has numDocs >= 1. One narrow (docId-only) exchange per
@@ -859,31 +995,31 @@ class Searcher(val index: Index) extends Serializable {
     // the tombstones its docId range can contain.
     val input =
       if (!wandTombstonesOverflow) blockRows
-      else blockRows.unionAll(index.deletes.get.select(
-        lit("").as("term"), col("docId").cast("long").as("firstDocId"),
-        col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
-        lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
-        lit(null).cast("binary").as("docsBlob"), lit(null).cast("binary").as("freqsBlob"),
-        lit(null).cast("binary").as("normsBlob")))
+      else {
+        val noBlob = lit(null).cast("binary")
+        val none = lit(Array.emptyByteArray)
+        blockRows.unionAll(index.deletes.get.select(
+          lit(field).as("field"), lit("").as("term"), col("docId").cast("long").as("firstDocId"),
+          col("docId").cast("long").as("lastDocId"), lit(-1).as("numDocs"),
+          lit(0).as("maxTf"), lit(0L).as("sumTf"), lit(0).as("minDlq"),
+          noBlob.as("docsBlob"), noBlob.as("freqsBlob"), noBlob.as("normsBlob"),
+          none.as("positionsBlob"), none.as("payloadsBlob"), none.as("offsetsBlob")))
+      }
     input
       .repartition(parts, shiftrightunsigned(col("firstDocId"), graft.index.IndexBuilder.SaltShift))
-      .as[(String, Long, Long, Int, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .map(t => graft.index.PostingBlock("", t._1, t._2, t._3, t._4, t._5, t._6, t._7,
-        t._8, t._9, t._10, Array.empty[Byte]))
+      .as[PostingBlock]
       .mapPartitions { it =>
         val all = it.toArray
         val (tombRows, blocks) = all.partition(_.numDocs < 0)
         val deleted: Long => Boolean =
-          if (tomb != null) {
-            val sorted = tomb.value
-            d => java.util.Arrays.binarySearch(sorted, d) >= 0
-          } else if (tombRows.isEmpty) _ => false
+          if (tomb != null) Searcher.memberOf(tomb.value)
+          else if (tombRows.isEmpty) _ => false
           else {
             // per-bucket liveDocs: sorted with possible duplicates (the
             // delete table is append-only) — binarySearch still decides
             val sorted = tombRows.map(_.firstDocId)
             java.util.Arrays.sort(sorted)
-            d => java.util.Arrays.binarySearch(sorted, d) >= 0
+            Searcher.memberOf(sorted)
           }
         val byTerm = blocks.groupBy(_.term)
         val termBlocks = wts.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty)) }
@@ -893,32 +1029,127 @@ class Searcher(val index: Index) extends Serializable {
       }
   }
 
+  // ------------------------------------------------------- local top-k route
+
+  /** Whether a query whose terms hold `postings` postings takes the local
+    * route: at most `maxLocalTopKPostings`, and a tombstone set that fits
+    * the latched liveDocs array (so this latches `wandMaxTombstones` — only
+    * for a query under the size cap).
+    */
+  private def servesLocally(postings: Long): Boolean =
+    postings <= maxLocalTopKPostings && !wandTombstonesOverflow
+
+  /** liveDocs test of the local route (only called when the tombstones did
+    * not overflow, so the latched array holds all of them).
+    */
+  private def tombstoned: Long => Boolean = wandTombstones match {
+    case Some(b) => Searcher.memberOf(b.value)
+    case None    => _ => false
+  }
+
+  /** The blocks of `keys`, collected by one filtered, column-pruned scan.
+    * Unlike the distributed route this scan is not narrowed to the rarest
+    * term's block ranges: the kernels decode only blocks that hold a
+    * candidate docId, the collected volume is bounded by
+    * `maxLocalTopKPostings`, and on the code corpus the rare term's blocks
+    * span the whole docId range, so the range fetch cost a job per new rare
+    * term and removed no bytes.
+    */
+  private def collectBlocks(keys: Seq[(String, String)], withPositions: Boolean): Array[PostingBlock] =
+    fetchBlocks(keys, withPositions).as[PostingBlock].collect()
+
+  /** Hits as a LocalRelation: collecting it runs no Spark job. */
+  private def localHits(hits: Seq[(Long, Double)]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, Searcher.HitSchema)
+  }
+
+  /** The local top-k route (see the class doc): Some(top-k) when the query
+    * has a shape the block kernels serve and its terms are under the cap;
+    * None sends it to the distributed route.
+    */
+  private def localTopK(q: Query, k: Int): Option[Searcher.LocalTop] = wandable(q) match {
+    case Some((f, wts, tie)) if wts.nonEmpty =>
+      bm25Weights(f, wts) match {
+        case None => Some(Searcher.NoHits)
+        case Some((weights, avgdl, postings)) => localWand(f, weights, avgdl, postings, k, tie)
+      }
+    case _ => q match {
+      case p: Phrase => phrasePlan(p).fold(Option(Searcher.NoHits))(localPositional(_, k))
+      case n: Near   => nearPlan(n).fold(Option(Searcher.NoHits))(localPositional(_, k))
+      case Bool(clauses) => termConjunction(clauses).flatMap { case (f, must, filter, nots) =>
+        val notTerms = nots.collect { case Term(`f`, t) => t }
+        // a MUST_NOT that is not a same-field term stays on the eval route
+        if (notTerms.length == nots.length) localConjunction(f, must, filter, notTerms, k)
+        else None
+      }
+      case _ => None
+    }
+  }
+
+  private def localWand(field: String, weights: Seq[(String, Double)], avgdl: Double,
+      postings: Long, k: Int, tie: Double): Option[Searcher.LocalTop] = {
+    if (!servesLocally(postings)) return None
+    val byTerm = collectBlocks(weights.map(w => (field, w._1)), withPositions = false)
+      .groupBy(_.term)
+    val r = Wand.topkPartitionFull(
+      weights.map { case (t, w) => (w, byTerm.getOrElse(t, Array.empty[PostingBlock])) },
+      avgdl, k, tombstoned, tie)
+    wandDecoded.add(r.decodedBlocks)
+    Some(Searcher.LocalTop(Searcher.topOf(r.top.iterator, k)._1, r.scoredDocs, r.pruned))
+  }
+
+  private def localConjunction(field: String, mustTerms: Seq[String], filterTerms: Seq[String],
+      notTerms: Seq[String], k: Int): Option[Searcher.LocalTop] = {
+    val (ord, w, avgdl) = conjunctionPlan(field, mustTerms, filterTerms)
+      .getOrElse(return Some(Searcher.NoHits))
+    val terms = (ord.toSeq ++ notTerms).distinct
+    if (!servesLocally(Searcher.postingsOf(termStats(field, terms)))) return None
+    val blocks = collectBlocks(terms.map((field, _)), withPositions = false)
+    val excluded = blocks.filter(b => notTerms.contains(b.term))
+      .flatMap(b => PostingCodec.decodeDocIds(b.firstDocId, b.numDocs, b.docsBlob))
+    java.util.Arrays.sort(excluded)
+    val (deleted, negated) = (tombstoned, Searcher.memberOf(excluded))
+    val (hits, n) = Searcher.topOf(Conjunction.scorePartition(ord, w, avgdl, blocks.iterator)
+      .filter { case (d, _) => !deleted(d) && !negated(d) }, k)
+    Some(Searcher.LocalTop(hits, n, pruned = false))
+  }
+
+  private def localPositional(pp: Searcher.PositionalPlan, k: Int): Option[Searcher.LocalTop] = {
+    if (!servesLocally(pp.positions)) return None
+    val keys = pp.dfOrder.map((pp.field, _))
+    val deleted = tombstoned
+    val matches = PhraseMatcher.intersectKeyed(keys.toArray, Array.empty, pp.field,
+        collectBlocks(keys, withPositions = true).iterator)
+      .filter { case (docId, _, _) => !deleted(docId) }
+      .map { case (docId, dlq, lists) => (docId, pp.freq(lists), dlq) }
+      .collect { case (docId, f, dlq) if f > 0.0 => (docId, Bm25.score(f, dlq, pp.weight, pp.avgdl)) }
+    val (hits, n) = Searcher.topOf(matches, k)
+    Some(Searcher.LocalTop(hits, n, pruned = false))
+  }
+
   /** Top-k with Lucene's `TotalHits` surfaced from the ACTUAL top-k path
     * (TopScoreDocCollector semantics; reference `Hits.count` is an int when
     * exact and a float when an estimate, documents.py:350-355): when the
     * WAND route prunes, `total` is the GREATER_THAN_OR_EQUAL lower bound of
     * docs it actually scored — no separate counting job; when nothing was
-    * pruned (or the exhaustive route ran), `total` is exact. Per-partition
-    * tops are merged on the driver (≤ partitions × k rows — metadata-scale).
+    * pruned (or the exhaustive route ran), `total` is exact. The local route
+    * takes both from its one driver pass; the distributed WAND route merges
+    * the per-partition tops on the driver (≤ partitions × k rows). Either
+    * way the hits are computed by this call, not when they are collected.
     */
   def searchHits(q: Query, k: Int = 10): SearchHits = {
     if (wandEnabled && k > 0) {
+      localTopK(q, k).foreach(top => return SearchHits(localHits(top.hits), top.total(k)))
       wandable(q).foreach { case (f, wts0, tie) =>
         if (wts0.nonEmpty) {
-          val (weights, avgdl) = bm25Weights(f, wts0)
-            .getOrElse(return SearchHits(emptyMatches, TotalHits(0, exact = true)))
+          val (weights, avgdl, _) = bm25Weights(f, wts0)
+            .getOrElse(return SearchHits(localHits(Nil), TotalHits(0, exact = true)))
           val per = wandPartitions(f, weights, avgdl, k, tie).collect()
-          val merged = per.flatMap { case (ids, scores, _, _) => ids.zip(scores) }
-            .sortBy { case (id, s) => (-s, id) }.take(k).toSeq
-          val scored = per.map(_._3).sum
-          val pruned = per.exists(_._4)
-          // a pruned run implies a full heap somewhere, so matches ≥ k and
-          // max(scored, k) remains a valid lower bound
-          val total =
-            if (!pruned) TotalHits(scored, exact = true)
-            else TotalHits(math.max(scored, k.toLong), exact = false)
-          val hits = if (merged.isEmpty) emptyMatches else merged.toDF("docId", "score")
-          return SearchHits(hits, total)
+          val (merged, _) = Searcher.topOf(
+            per.iterator.flatMap { case (ids, scores, _, _) => ids.zip(scores) }, k)
+          val top = Searcher.LocalTop(merged, per.map(_._3).sum, per.exists(_._4))
+          return SearchHits(localHits(top.hits), top.total(k))
         }
       }
     }
@@ -926,13 +1157,20 @@ class Searcher(val index: Index) extends Serializable {
   }
 
   /** Top-k search (reference IndexSearcher.search, indexers.py:401-432).
-    * Relevance: score desc, docId asc (Lucene collector order) →
-    * TakeOrderedAndProject. Field sort: join the tiny match set to docvalue
-    * columns. `k <= 0` retrieves all hits (count=None semantics).
+    * Relevance: score desc, docId asc (Lucene collector order) — the local
+    * or distributed kernel route (class doc) when `wandEnabled` and the
+    * shape allows, else `eval` → TakeOrderedAndProject. Field sort: join the
+    * tiny match set to docvalue columns. `k <= 0` retrieves all hits
+    * (count=None semantics).
+    *
+    * On the local route the result is EAGER: the block scan and scoring run
+    * here and the DataFrame is a LocalRelation of the hits (its `explain()`
+    * shows no scan); every other route returns a lazy plan.
     */
   def search(q: Query, k: Int = 10, sorts: Seq[SortSpec] = Nil,
       select: Seq[String] = Nil): DataFrame = {
     if (wandEnabled && k > 0 && sorts.isEmpty && select.isEmpty) {
+      localTopK(q, k).foreach(top => return localHits(top.hits))
       wandable(q).foreach { case (f, wts, tie) =>
         if (wts.nonEmpty) return searchWand(f, wts, k, tie)
       }

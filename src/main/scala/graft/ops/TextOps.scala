@@ -3,6 +3,12 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+/** [[TextOps.redactPii]]'s struct: the redacted text and the e-mail, IPv4
+  * and phone counts; all four NULL for a NULL text.
+  */
+final case class PiiRedaction(clean: String, n_emails: Integer, n_ips: Integer,
+    n_phones: Integer)
+
 /** Text-analysis operators for large-scale training-data pipelines, built
   * from Spark native (codegen'd) expressions — no UDFs in the hot path.
   * Every op has a deterministic SQL mirror for the DuckDB oracle.
@@ -109,8 +115,11 @@ object TextOps {
     * Spark's RegExpReplace/RegExpExtractAll use the same java.util.regex
     * engine with the same patterns, no flags and non-overlapping find()
     * semantics, and the placeholders hold no `$`/`\` escapes.
-    * Returns struct(clean, n_emails, n_ips, n_phones); a NULL text gives a
-    * non-NULL struct whose four fields are NULL.
+    * Returns struct(clean, n_emails, n_ips, n_phones) — the UDF's own
+    * [[PiiRedaction]] result, so one call per row builds the whole struct
+    * whatever the optimizer does; project it once and read its fields from
+    * that column. A NULL text gives a non-NULL struct whose four fields are
+    * NULL.
     */
   def redactPii(text: Column): Column = {
     // ONE matcher walk per category does the count AND the replacement
@@ -128,8 +137,8 @@ object TextOps {
     val ipP = java.util.regex.Pattern.compile(
       "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b")
     val phoneP = java.util.regex.Pattern.compile("\\+\\d[\\d\\- ]{7,}\\d")
-    val f = udf((t: String) => {
-      if (t == null) null
+    udf((t: String) => {
+      if (t == null) PiiRedaction(null, null, null, null)
       else {
         def pass(s: String, p: java.util.regex.Pattern, repl: String): (String, Int) = {
           val m = p.matcher(s)
@@ -150,15 +159,9 @@ object TextOps {
         val (afterEmail, nEmails) = pass(t, emailP, "<EMAIL>")
         val (afterIp, nIps) = pass(afterEmail, ipP, "<IP>")
         val (clean, nPhones) = pass(afterIp, phoneP, "<PHONE>")
-        (clean, nEmails, nIps, nPhones)
+        PiiRedaction(clean, nEmails, nIps, nPhones)
       }
-    })
-    val a = f(text)
-    struct(
-      a.getField("_1").as("clean"),
-      a.getField("_2").as("n_emails"),
-      a.getField("_3").as("n_ips"),
-      a.getField("_4").as("n_phones"))
+    }).apply(text)
   }
 
   /** C4 line/page cleaning (Raffel et al., "Exploring the Limits of

@@ -432,39 +432,11 @@ class MergeSpec extends SparkTestBase {
     w.searcher // the view a serving loop already holds
     addDoc(w, "new", "alpha fresh")
     w.delete(Term("content", "uniq01"))
-    val jobs = jobsOf { w.commit(); w.searcher }
+    val jobs = sparkWork { w.commit(); w.searcher }.jobs
     assert(w.count(Term("content", "uniq01")) === 0L && w.count(Term("content", "fresh")) === 1L)
     // measured: 17 jobs; 43 when each lineage question ran its own
     // schema-inferred aggregate and the reopen aggregated every posting block
     assert(jobs <= 17, s"commit + reopen ran $jobs Spark jobs")
     w.close()
-  }
-
-  /** Spark jobs `body` submits from this thread. Jobs are tagged by job
-    * group; a tagged sentinel job drains the asynchronous listener bus
-    * before the count is read.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group`                      => counted.incrementAndGet(); ()
-          case g if g == s"$group-sentinel" => drained.countDown()
-          case _                            =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      counted.get()
-    } finally sc.removeSparkListener(listener)
   }
 }

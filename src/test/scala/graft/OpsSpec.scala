@@ -439,6 +439,11 @@ class OpsSpec extends SparkTestBase {
     // IPv4 — emails redact FIRST, so it counts as 1 email + 1 ip, not 2 ips
     assert(got(4L) === (("mixed <EMAIL> then <IP> then <PHONE> end", 1, 1, 1)))
     assert(got(5L) === (("clean text with no personal identifiers at all", 0, 0, 0)))
+    // one UDF call builds the whole struct: the projected struct holds a
+    // single ScalaUDF, not one per field left for subexpression elimination
+    val udfs = df.select(r.as("r")).queryExecution.analyzed.expressions
+      .flatMap(_.collect { case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+    assert(udfs.length === 1)
   }
 
   test("property: excision leaves NO cross-doc duplicated window behind; decontaminate output is clean") {

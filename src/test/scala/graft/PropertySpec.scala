@@ -234,6 +234,27 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  /** Random queries of the shapes the top-k kernel routes serve: terms,
+    * SHOULD-of-terms (boosted), DisMax, term conjunctions with FILTER and
+    * MUST_NOT terms, phrases (gapped, sloppy, repeated terms) and near.
+    */
+  def genKernel(r: scala.util.Random): graft.query.Query = {
+    def w(): String = if (r.nextInt(10) == 0) "zzmissing" else vocab(r.nextInt(vocab.length))
+    def t(): graft.query.Query = Term("content", w())
+    r.nextInt(7) match {
+      case 0 => t()
+      case 1 => Bool(Seq.fill(2 + r.nextInt(3))(Occur.Should -> t()))
+      case 2 => DisMax(r.nextDouble(), Seq.fill(1 + r.nextInt(3))(t()))
+      case 3 => Boost(Bool(Seq.fill(2)(Occur.Should -> Boost(t(), 1.0 + r.nextInt(3)))),
+        1.0 + r.nextInt(2))
+      case 4 => Bool(Seq.fill(2 + r.nextInt(2))((if (r.nextBoolean()) Occur.Must else Occur.Filter) -> t()) ++
+        Seq.fill(r.nextInt(2))(Occur.MustNot -> t()))
+      case 5 => Phrase("content",
+        Seq.fill(2 + r.nextInt(2))(if (r.nextInt(6) == 0) None else Some(w())), r.nextInt(3))
+      case 6 => Near("content", Seq.fill(2 + r.nextInt(2))(w()), r.nextInt(4), r.nextBoolean())
+    }
+  }
+
   private def normalize(m: Map[Long, Double]): Map[Long, Long] =
     m.collect { case (id, s) => id -> math.round(s * 1e7) }
 
@@ -254,5 +275,28 @@ class PropertySpec extends SparkTestBase {
     }
     assert(checked === numQueries)
     assert(nonEmpty > numQueries * 2 / 3, s"only $nonEmpty non-empty results — generator too weak")
+  }
+
+  test("random kernel-shaped top-k: local route and distributed route ≡ local reference top-k") {
+    val r = new scala.util.Random(sys.env.getOrElse("GRAFT_PROP_SEED", "20260816").toLong + 1)
+    def top(m: Map[Long, Double], k: Int): Seq[(Long, Long)] =
+      m.toSeq.sortBy { case (id, sc) => (-sc, id) }.take(k).map { case (id, sc) => id -> math.round(sc * 1e7) }
+    def got(q: graft.query.Query, k: Int): Seq[(Long, Long)] =
+      searcher.search(q, k).collect().map(x => x.getLong(0) -> math.round(x.getDouble(1) * 1e7)).toSeq
+    var nonEmpty = 0
+    (1 to 40).foreach { i =>
+      val q = genKernel(r)
+      val expected = LocalRef.eval(q)
+      if (expected.nonEmpty) nonEmpty += 1
+      for (k <- Seq(1, 10, 100)) {
+        assert(searcher.search(q, k).isLocal, s"query #$i: $q took the distributed route")
+        assert(got(q, k) === top(expected, k), s"query #$i k=$k: $q")
+      }
+      val cap = searcher.maxLocalTopKPostings
+      searcher.maxLocalTopKPostings = 0
+      try assert(got(q, 10) === top(expected, 10), s"query #$i distributed: $q")
+      finally searcher.maxLocalTopKPostings = cap
+    }
+    assert(nonEmpty > 20, s"only $nonEmpty non-empty results — generator too weak")
   }
 }

@@ -118,30 +118,61 @@ class ScaleSpec extends SparkTestBase {
       df.collect()
       df.queryExecution.executedPlan.toString
     }
+    val phrase = Query.phrase("content", "we", "the", "people")
+    val and = Query.all(Term("content", "parse"), Term("content", "merge"))
+    // under the local-route cap a top-k is one driver-side pass: search()
+    // plans a LocalRelation. The shapes below are the distributed route's,
+    // forced with the local-route cap at 0 (every other knob at its default)
+    assert(s.search(phrase, 10).isLocal && s.search(and, 10).isLocal)
+    val base = Seq(phrase, and).map(q => s.search(q, 10).collect().map(_.getLong(0)).toSeq)
+    val localCap = s.maxLocalTopKPostings
+    s.maxLocalTopKPostings = 0
     // phrase: wider terms' blocks prune to the rarest term's docId coverage
     // via LITERAL range predicates (no shuffle, no extra job) when the rare
     // term's block list is driver-small
-    val phrasePlan = planOf(s.search(Query.phrase("content", "we", "the", "people"), 10))
+    val phrasePlan = planOf(s.search(phrase, 10))
     assert(!phrasePlan.contains("LeftSemi"), phrasePlan.take(1500))
     assert(phrasePlan.contains("lastDocId"), phrasePlan.take(1500))
     // pure term conjunction routes through the same intersect (no hash
     // aggregate of unioned full postings)
-    val andPlan = planOf(s.search(Query.all(Term("content", "parse"), Term("content", "merge")), 10))
+    val andPlan = planOf(s.search(and, 10))
     assert(!andPlan.contains("LeftSemi") && andPlan.contains("lastDocId"), andPlan.take(1500))
-    // above the driver cap the pruner degrades to the distributed bucket
-    // semi-join (the cluster-scale posture for a hot "rarest" term) — same
-    // results either way
-    val base = s.search(Query.phrase("content", "we", "the", "people"), 10)
-      .collect().map(_.getLong(0)).toSeq
+    // above the rare-range driver cap the pruner degrades to the distributed
+    // bucket semi-join (the cluster-scale posture for a hot "rarest" term) —
+    // same results on every route
     s.maxRareDriverBlocks = 0
-    val fbPlan = planOf(s.search(Query.phrase("content", "we", "the", "people"), 10))
+    val fbPlan = planOf(s.search(phrase, 10))
     assert(fbPlan.contains("LeftSemi"), fbPlan.take(1500))
-    assert(s.search(Query.phrase("content", "we", "the", "people"), 10)
-      .collect().map(_.getLong(0)).toSeq === base)
+    assert(Seq(phrase, and).map(q => s.search(q, 10).collect().map(_.getLong(0)).toSeq) === base)
     s.maxRareDriverBlocks = 4096
+    s.maxLocalTopKPostings = localCap
     // groupBy ranks groups without an unpartitioned window
     val gPlan = planOf(s.groupBy("lang", Term("content", "def"), groups = 2))
     assert(!gPlan.contains("Window [dense_rank"), gPlan.take(1500))
+  }
+
+  test("local top-k route: one Spark job and no shuffle per term/or/and/phrase top-10 " +
+      "on a saved index; the distributed route above the cap still shuffles") {
+    val dir = Files.createTempDirectory("graft-localjobs").toString
+    IndexBuilder.build(corpus, schema, numPartitions = 4).save(dir)
+    val s = new Searcher(IndexBuilder.load(spark, dir))
+    val queries = Seq(
+      Term("content", "def"),
+      Query.any(Term("content", "index"), Term("content", "scan")),
+      Query.all(Term("content", "parse"), Term("content", "merge")),
+      Query.phrase("content", "we", "the", "people"))
+    def run(q: Query) = s.search(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val local = queries.map(run) // also warms the term stats
+    queries.foreach { q =>
+      val w = sparkWork(run(q))
+      assert(w === SparkWork(jobs = 1, shuffleWriteBytes = 0L), s"$q")
+    }
+    s.maxLocalTopKPostings = 0
+    assert(queries.map(run) === local)
+    queries.foreach { q =>
+      val w = sparkWork(run(q))
+      assert(w.jobs > 1 && w.shuffleWriteBytes > 0L, s"$q ran $w above the cap")
+    }
   }
 
   test("fuzzy trigram prefilter: identical results, candidates ≪ dictionary, fallback for short queries") {

@@ -116,5 +116,20 @@ class SloppyPhraseSpec extends SparkTestBase {
     val expected = Bm25.idf(1, 1) * 2 * 0.5 / (0.5 + Bm25.k1 * (1 - Bm25.b + Bm25.b *
       graft.util.SmallFloat.quantizeLength(3).toDouble / 3))
     assert(math.abs(md(0) - expected) < 1e-12)
+    // the local top-k route, the distributed route (cap 0) and exhaustive
+    // evaluation agree bit for bit on repeated-term, gapped and near shapes
+    val shapes = Seq(q, q2, Phrase("content", Seq(Some("b"), None, Some("b")), slop = 0),
+      Phrase("content", Seq(Some("a"), Some("a")), slop = 0),
+      Near("content", Seq("a", "b"), slop = 1, inOrder = false))
+    for (pq <- shapes; k <- Seq(1, 10, 100)) {
+      def run() = searcher.search(pq, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val local = run()
+      val cap = searcher.maxLocalTopKPostings
+      searcher.maxLocalTopKPostings = 0
+      val distributed = try run() finally searcher.maxLocalTopKPostings = cap
+      searcher.wandEnabled = false
+      val exhaustive = try run() finally searcher.wandEnabled = true
+      assert(local === distributed && local === exhaustive, s"$pq k=$k")
+    }
   }
 }

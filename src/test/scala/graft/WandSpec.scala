@@ -17,6 +17,9 @@ class WandSpec extends SparkTestBase {
   lazy val index: Index = IndexBuilder.build(
     CodeCorpus.generate(spark, 3000, 8), schema, numPartitions = 8).cached()
   lazy val searcher = new Searcher(index)
+  /** The 20,000-doc view: several salt buckets per term. */
+  lazy val big: Index = IndexBuilder.build(
+    CodeCorpus.generate(spark, 20000, 8), schema, numPartitions = 8).cached()
 
   val queries: Seq[Seq[String]] = Seq(
     Seq("def", "parse"),
@@ -309,13 +312,11 @@ class WandSpec extends SparkTestBase {
     // a multi-bucket view (>8192 docs => several salt buckets) with a heavy
     // delete set spanning buckets, and the broadcast cap forced to 0 so
     // EVERY tombstone overflows into the co-partitioned path
-    val bigIdx = IndexBuilder.build(CodeCorpus.generate(spark, 20000, 8), schema,
-      numPartitions = 8).cached()
-    val sPlain = new Searcher(bigIdx)
+    val sPlain = new Searcher(big)
     val q = Q.any(Term("content", "def"), Term("content", "parse"))
     val deadIds = sPlain.search(q, 50).collect().map(_.getLong(0)).toSeq ++
       (0L until 20000L by 7L) // bulk tombstones across every bucket
-    val delView = bigIdx.withDeletes(deadIds.distinct.toDF("docId"))
+    val delView = big.withDeletes(deadIds.distinct.toDF("docId"))
     val sDel = new Searcher(delView)
     sDel.wandMaxTombstones = 0 // before any search: forces the overflow path
     def exhaust(k: Int): Seq[(Long, Long)] = {
@@ -341,8 +342,93 @@ class WandSpec extends SparkTestBase {
     // the cap LATCHES at first search: late assignment is an error, not a
     // silent no-op (advisor r5)
     assertThrows[IllegalArgumentException] { sDel.wandMaxTombstones = 4 << 20 }
-    bigIdx.blocks.unpersist()
-    bigIdx.docs.unpersist()
+  }
+
+  /** Every kernel shape the local top-k route serves, plus one it must
+    * decline (a MUST_NOT that is not a term).
+    */
+  val routeQueries: Seq[Q] = {
+    def t(x: String) = Term("content", x)
+    Seq(
+      t("def"), t("parse"), t("scan17"),
+      Q.any(t("def"), t("parse")),
+      Q.any(t("scan17"), t("merge3"), t("class")),
+      Q.any(t("def").boost(2.0), t("parse")),
+      Boost(Q.any(t("the"), t("index")), 1.5),
+      DisMax(0.3, Seq(t("def"), t("class"), t("parse"))),
+      Boost(DisMax(0.3, Seq(t("def").boost(2.0), t("parse"))), 1.5),
+      Q.all(t("def"), t("parse")),
+      Q.all(t("the"), t("return"), t("index")),
+      Bool(Seq(Occur.Must -> t("def"), Occur.Filter -> t("parse"))),
+      Bool(Seq(Occur.Must -> t("def"), Occur.Must -> t("parse"), Occur.MustNot -> t("merge"))),
+      Bool(Seq(Occur.Must -> t("def"), Occur.Must -> t("parse"),
+        Occur.MustNot -> Prefix("content", "merge"))),
+      Q.phrase("content", "we", "the", "people"),
+      Q.phrase("content", "block", "max", "wand"),
+      Phrase("content", Seq(Some("we"), None, Some("people"))),
+      Phrase("content", Seq(Some("people"), Some("we")), slop = 3),
+      Phrase("content", Seq(Some("def"), Some("def")), slop = 2),
+      Phrase("content", Seq(Some("def"), Some("class"), Some("def")), slop = 1),
+      Near("content", Seq("the", "parse"), slop = 4, inOrder = true),
+      Near("content", Seq("wand", "block"), slop = 2, inOrder = false))
+  }
+
+  /** (docId, score·1e9) top-k per route: local (default cap), distributed
+    * (cap 0) and exhaustive (`wandEnabled = false`), plus whether the
+    * default search came back as a local result.
+    */
+  private def routes(s: Searcher, q: Q, k: Int): (Seq[(Long, Long)], Seq[(Long, Long)],
+      Seq[(Long, Long)], Boolean) = {
+    def run(): Seq[(Long, Long)] = s.search(q, k).collect()
+      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
+    val isLocal = s.search(q, k).isLocal
+    val local = run()
+    val cap = s.maxLocalTopKPostings
+    s.maxLocalTopKPostings = 0
+    val distributed = try run() finally s.maxLocalTopKPostings = cap
+    s.wandEnabled = false
+    val exhaustive = try run() finally s.wandEnabled = true
+    (local, distributed, exhaustive, isLocal)
+  }
+
+  test("local top-k route ≡ distributed route ≡ exhaustive on every kernel shape " +
+      "(plain, tombstoned and multi-bucket views)") {
+    import spark.implicits._
+    val dead = searcher.search(Q.any(Term("content", "def"), Term("content", "parse")), 5)
+      .collect().map(_.getLong(0)).toSeq ++ (0L until 3000L by 11L)
+    val views = Seq(
+      "plain" -> searcher,
+      "tombstoned" -> new Searcher(index.withDeletes(dead.distinct.toDF("docId"))),
+      "20k" -> new Searcher(big))
+    for ((view, s) <- views; q <- routeQueries; k <- Seq(1, 10, 100)) {
+      val (local, distributed, exhaustive, isLocal) = routes(s, q, k)
+      val declines = q.isInstanceOf[Bool] && q.asInstanceOf[Bool].clauses.exists {
+        case (Occur.MustNot, _: Prefix) => true
+        case _                          => false
+      }
+      assert(isLocal === !declines, s"$view $q k=$k: local route taken")
+      assert(local === exhaustive, s"$view $q k=$k: local vs exhaustive")
+      assert(distributed === exhaustive, s"$view $q k=$k: distributed vs exhaustive")
+      if (view == "tombstoned") assert(local.map(_._1).toSet.intersect(dead.toSet).isEmpty)
+    }
+    val unmatched = routeQueries.filter(q => searcher.search(q, 10).collect().isEmpty)
+    assert(unmatched.isEmpty, "every shape matches on the plain view")
+    big.blocks.unpersist()
+    big.docs.unpersist()
+  }
+
+  test("searchHits: the TotalHits contract holds on both routes " +
+      "(exact when nothing was pruned, else a lower bound ≥ k)") {
+    val default = searcher.maxLocalTopKPostings
+    for (q <- routeQueries; k <- Seq(1, 10, 100); cap <- Seq(default, 0L)) {
+      searcher.maxLocalTopKPostings = cap
+      val r = try searcher.searchHits(q, k) finally searcher.maxLocalTopKPostings = default
+      val top = searcher.search(q, k).collect().map(_.getLong(0)).toSeq
+      assert(r.hits.collect().map(_.getLong(0)).toSeq === top, s"$q k=$k cap=$cap")
+      val n = searcher.count(q)
+      if (r.total.exact) assert(r.total.value === n, s"$q k=$k cap=$cap")
+      else assert(r.total.value >= k && r.total.value <= n, s"$q k=$k cap=$cap: ${r.total}")
+    }
   }
 
   test("Hits.maxscore: max of present hits, NaN when empty (documents.py:382-385)") {
